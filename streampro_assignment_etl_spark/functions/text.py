@@ -1,5 +1,5 @@
-"""Text-analysis primitives: language-ID heuristic + rolling-hash
-fingerprint (north-star operators for training-data curation).
+"""Text-analysis primitives: language-ID heuristic, rolling-hash and
+content fingerprints (north-star operators for training-data curation).
 
 Everything here is built-in column expressions with DuckDB-identical
 semantics so the queries stay oracle-checkable.
@@ -67,11 +67,20 @@ def rolling_hash(text: Column) -> Column:
     )
 
 
+def content_fingerprint(text: Column | str) -> Column:
+    """Exact-duplicate key: md5 of the lower-cased text with every
+    whitespace run collapsed to one space. The whitespace class is
+    spelled out because Java's ``\\s`` matches ``\\x0B`` and RE2's does
+    not, so the DuckDB oracles' ``regexp_replace`` agrees byte for
+    byte."""
+    return F.md5(F.lower(F.regexp_replace(text, r"[ \t\n\r\f\x0B]+", " ")))
+
+
 # ---------------------------------------------------------------------------
 # PII scrubbing (training-data redaction). Patterns use only constructs
 # with identical semantics in Java regex (Spark) and RE2 (DuckDB):
 # explicit character classes, no \d/\s/\b shorthands (SURVEY §7.2 /
-# the \x0B divergence note in queries/extensions.py).
+# the \x0B divergence note on content_fingerprint above).
 # ---------------------------------------------------------------------------
 PII_PATTERNS: dict[str, tuple[str, str]] = {
     # kind -> (pattern, replacement token)

@@ -19,6 +19,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import content_fingerprint
 from ..operators.components import _truncate_lineage
 from ..sources.testdata import load_table
 from .catalog import query
@@ -668,9 +669,7 @@ def incremental_dedup_against_corpus(spark: SparkSession, sf_dir: str) -> DataFr
     fp = docs.select(
         "doc_id",
         F.substring("source", 4, 10).cast("int").alias("_src_n"),
-        F.md5(F.lower(F.regexp_replace("text", r"[ \t\n\r\f\x0B]+", " "))).alias(
-            "fingerprint"
-        ),
+        content_fingerprint("text").alias("fingerprint"),
     )
     corpus = fp.filter(F.col("_src_n") < 10).select("fingerprint").distinct()
     batch = (
@@ -903,9 +902,7 @@ def dedup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = docs.select(
         "doc_id",
         "source",
-        F.md5(F.lower(F.regexp_replace("text", r"[ \t\n\r\f\x0B]+", " "))).alias(
-            "fingerprint"
-        ),
+        content_fingerprint("text").alias("fingerprint"),
     )
     occ = fp.groupBy("fingerprint").agg(F.count(F.lit(1)).alias("n_occ"))
     dup_flag = F.when(F.col("n_occ") > 1, 1).otherwise(0)

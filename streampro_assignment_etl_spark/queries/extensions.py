@@ -12,6 +12,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import content_fingerprint
 from ..sources.testdata import load_table
 from .catalog import query
 
@@ -74,9 +75,7 @@ def dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale-path for exact dedup (the md5 hex string is identical across
     engines, so it doubles as an oracle-checkable content hash)."""
     docs = load_table(spark, sf_dir, "documents")
-    # Explicit whitespace class: Java \s includes \x0B but RE2's does not,
-    # so a literal class keeps fingerprints engine-identical on VT chars.
-    fp = F.md5(F.lower(F.regexp_replace("text", r"[ \t\n\r\f\x0B]+", " ")))
+    fp = content_fingerprint("text")
     return (
         docs.select("doc_id", fp.alias("fingerprint"))
         .groupBy("fingerprint")
@@ -862,7 +861,7 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.simhash import token_hash60
 
     docs = load_table(spark, sf_dir, "documents")
-    fp = F.md5(F.lower(F.regexp_replace("text", r"[ \t\n\r\f\x0B]+", " ")))
+    fp = content_fingerprint("text")
     deduped = (
         docs.withColumn(
             "rn", F.row_number().over(Window.partitionBy(fp).orderBy("doc_id"))
@@ -2152,7 +2151,7 @@ def dedup_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import rolling_hash
 
     docs = load_table(spark, sf_dir, "documents")
-    fp = F.md5(F.lower(F.regexp_replace("text", r"[ \t\n\r\f\x0B]+", " ")))
+    fp = content_fingerprint("text")
     return (
         docs.select(
             "doc_id",

@@ -189,7 +189,7 @@ def streaming_stateful_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ckpt,
         max_files_per_trigger=1,
         shuffle_partitions=4,
-        n_shards=64,
+        layout="shard",
         # Scratch checkpoint (fresh lake every run): the per-file .crc
         # siblings protect nothing here — see run_dedup_stream.
         checkpoint_file_checksum=False,

@@ -13,18 +13,76 @@ batches. The idle heuristic is deliberately conservative: under load
 the engine can emit a zero-row batch BEFORE source listing finds new
 files, so an idle report is only trusted after a data batch has run
 (or a grace period passed).
+
+The module also owns the two sides of the ``batch_id=N`` sink format:
+the writer and the typed reader, plus the per-drain conf dials.
 """
 
 from __future__ import annotations
 
 import time
+from collections.abc import Iterator
+from contextlib import contextmanager
+
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+_CHECKPOINT_CRC = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
+
+
+@contextmanager
+def drain_confs(
+    spark,
+    shuffle_partitions: int | None = None,
+    checkpoint_file_checksum: bool | None = None,
+) -> Iterator[None]:
+    """Set a drain's conf dials for the body and restore them after,
+    also when the body raises. A dial left None is neither read nor
+    set, so the Spark-4.1-only checkpoint-checksum key is never touched
+    unless a caller asks for it. A conf that was unset before is unset
+    again, not pinned to the value it read as.
+
+    ``shuffle_partitions`` is the STATE partition count of a stream
+    starting from a fresh checkpoint (frozen there; existing
+    checkpoints ignore it). ``checkpoint_file_checksum=False`` drops the
+    ``.crc`` sibling of every checkpoint file write, which is right only
+    for a scratch checkpoint rebuilt each run. Both assume one query per
+    session at a time."""
+    dials = {}
+    if shuffle_partitions is not None:
+        dials["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    if checkpoint_file_checksum is not None:
+        dials[_CHECKPOINT_CRC] = str(checkpoint_file_checksum).lower()
+    saved = {key: spark.conf.get(key, None) for key in dials}
+    try:
+        for key, value in dials.items():
+            spark.conf.set(key, value)
+        yield
+    finally:
+        for key, value in saved.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
+
+
+def read_batch_sink(spark, out_dir: str) -> DataFrame:
+    """Read a ``batch_id=N``-partitioned foreachBatch sink with
+    ``batch_id`` as a long. The package session turns partition type
+    inference off, so the column would read as a string and rank batch
+    9 above batch 10."""
+    return (
+        spark.read.option("basePath", out_dir)
+        .parquet(out_dir)
+        .withColumn("batch_id", F.col("batch_id").cast("long"))
+    )
 
 
 def make_pair_sink_writer(
     out_dir: str, keys: list[str] | None = None, *, skip_empty: bool
 ):
-    """foreachBatch writer shared by the stateful-dedup sinks:
-    batch-local dropDuplicates on ``keys`` when given (a near-dup pair
+    """foreachBatch writer of the ``batch_id=N`` sinks (the stateful-dedup
+    streams and ``run_stream_to_parquet``): batch-local dropDuplicates on ``keys`` when given (a near-dup pair
     can surface through several shared buckets, always in its second
     item's ONE arrival batch, so this makes pair output exactly-once;
     the exact-dedup streams emit unique rows already and pass None) +

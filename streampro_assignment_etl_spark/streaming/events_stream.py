@@ -29,6 +29,12 @@ from pyspark.sql import functions as F
 
 from ..functions.exact import dec
 from ..pipeline.schemas import TESTDATA_TABLES
+from ._drain import (
+    drain_available_now,
+    drain_confs,
+    make_pair_sink_writer,
+    read_batch_sink,
+)
 
 EVENTS_SCHEMA = TESTDATA_TABLES["trusted_events"].struct  # ts arrives as string
 
@@ -145,48 +151,24 @@ def run_stream_to_parquet(
     the sink idempotent under checkpoint retries (exactly-once, not
     at-least-once); readers see batch_id as a partition column.
 
-    ``shuffle_partitions`` sets this stream's STATE partition count
-    (frozen at the first checkpoint — same contract and sizing rule as
-    ``run_dedup_stream``: expected distinct-key volume, not the
-    session's core count; each micro-batch pays one state commit per
-    partition). Restored after the drain; None keeps the session value.
-
-    ``checkpoint_file_checksum`` toggles the per-checkpoint-file ``.crc``
-    sibling writes for this drain (restored after) — same contract and
-    rationale as ``run_dedup_stream``: off is right ONLY for per-run
-    scratch checkpoints; keep the default for any checkpoint that must
-    survive a restart.
+    ``shuffle_partitions`` and ``checkpoint_file_checksum`` are the
+    drain's conf dials (``_drain.drain_confs``): size the first to the
+    expected distinct-key volume, not the session's core count (each
+    micro-batch pays one state commit per partition); turn the second
+    off ONLY for per-run scratch checkpoints.
     """
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
-
-    spark = result.sparkSession
-    _CRC = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    saved_crc = spark.conf.get(_CRC)
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    if checkpoint_file_checksum is not None:
-        spark.conf.set(_CRC, str(checkpoint_file_checksum).lower())
-    try:
+    with drain_confs(
+        result.sparkSession, shuffle_partitions, checkpoint_file_checksum
+    ):
         q = (
             result.writeStream.outputMode(mode)
-            .foreachBatch(write_batch)
+            .foreachBatch(make_pair_sink_writer(out_dir, skip_empty=False))
             .option("checkpointLocation", checkpoint_dir)
             .trigger(availableNow=True)
             .start()
         )
-        if not q.awaitTermination(timeout_s):
-            # Timed out: stop before the finally restores session confs,
-            # so a still-running drain never sees them flip back.
-            q.stop()
-            q.awaitTermination(timeout_s)
-    finally:
-        if shuffle_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", saved)
-        if checkpoint_file_checksum is not None:
-            spark.conf.set(_CRC, saved_crc)
+        drain_available_now(q, timeout_s, ttl=False)
 
 
 def read_update_sink(spark: SparkSession, out_dir: str, key_cols: list[str]) -> DataFrame:
@@ -212,7 +194,7 @@ def read_update_sink(spark: SparkSession, out_dir: str, key_cols: list[str]) -> 
     sinks."""
     from pyspark.sql.window import Window
 
-    df = spark.read.option("basePath", out_dir).parquet(out_dir)
+    df = read_batch_sink(spark, out_dir)
     w = Window.partitionBy(*key_cols).orderBy(F.col("batch_id").desc())
     return (
         df.withColumn("_rn", F.row_number().over(w))
@@ -263,7 +245,7 @@ def compact_update_sink(
     # range-sampling job, and the rewrite would otherwise each re-scan
     # the sink from disk (3× read for a maintenance op whose input is
     # the largest thing it touches).
-    df = spark.read.option("basePath", out_dir).parquet(out_dir).persist()
+    df = read_batch_sink(spark, out_dir).persist()
     try:
         dup = (
             df.groupBy(*key_cols, "batch_id")

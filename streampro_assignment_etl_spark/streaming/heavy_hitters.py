@@ -36,6 +36,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ._drain import read_batch_sink
+
 MG_STATE_SCHEMA = T.StructType(
     [
         T.StructField("terms", T.ArrayType(T.StringType())),
@@ -109,7 +111,7 @@ def read_mg_sink(spark, out_dir: str) -> DataFrame:
     but keyed a level higher."""
     from pyspark.sql.window import Window
 
-    df = spark.read.option("basePath", out_dir).parquet(out_dir)
+    df = read_batch_sink(spark, out_dir)
     w = Window.partitionBy("shard")
     return (
         df.withColumn("_maxb", F.max("batch_id").over(w))

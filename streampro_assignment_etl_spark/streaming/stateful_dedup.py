@@ -1,40 +1,74 @@
-"""Custom stateful streaming operator: cross-batch exact dedup
+"""Cross-batch exact dedup as one custom stateful stream operator
 (``applyInPandasWithState``).
 
 The batch dedup operators (queries/extensions.py, operators/minhash.py)
 answer "what is duplicated in this corpus"; a streaming training-data
 pipeline needs the online form — "have I EVER seen this document
-before" — across micro-batches and restarts. Spark has no built-in for
-that (``dropDuplicates`` on a stream needs watermark-bounded state and
-forgets), so this is the applyInPandasWithState case: state is keyed
-by content fingerprint, lives in the state store, and survives
-checkpoint restarts.
+before" — across micro-batches and restarts. ``dropDuplicates`` on a
+stream needs watermark-bounded state and forgets, so this is the
+applyInPandasWithState case: state is keyed by the content fingerprint
+(``functions.text.content_fingerprint``), lives in the state store and
+survives checkpoint restarts.
 
-Scale properties: state per DISTINCT fingerprint is one int; the
-stream shuffles by fingerprint (same key-width argument as batch
-fingerprint dedup); keys never expire (NoTimeout) because "seen
-before" has no horizon. For 100 TB key spaces the sharded BLOOM
-variant below (``dedup_stream_bloom``) bounds total state to
-n_shards fixed-size filters at a small false-positive cost — same
-operator shape, different state schema. Every layout now has a
-horizon lever: fine-grained wall-clock (``dedup_stream_ttl``) and
-event-time (``dedup_stream_event_ttl``), sharded event-time
-(``dedup_stream_sharded_event_ttl``, exact per-member horizons), and
-bloom event-time (``dedup_stream_bloom_event_ttl``, generational
-rotation) — event horizons are the ones that survive backfill
-replay; see each builder.
+``dedup_stream`` builds one cell of a key-layout × horizon grid:
 
-API note: Spark 4's successor API (``transformWithStateInPandas`` —
-typed ValueState/ListState/MapState, native state TTL, timers) is the
-forward path for these operators, but its Python driver worker needs
-``google.protobuf`` (absent here; probed — the runner crashes importing
-StateMessage_pb2) and mandates the RocksDB state-store provider, so
-this module stays on ``applyInPandasWithState``, which expresses the
-same semantics on the default provider with no extra deps.
+=======  ======================  ====================  =========================
+layout   no horizon              ``ttl_seconds``       ``ttl_event_seconds``
+=======  ======================  ====================  =========================
+key      ``seen`` per            ``seen`` per          ``(seen, last_ms)`` per
+         fingerprint; exact      fingerprint; exact    fingerprint; exact inside
+                                 inside the horizon    the horizon
+shard    ``fps`` seen-set per    ValueError            ``(fps, lasts)`` per
+         shard; exact                                  shard; exact inside the
+                                                       horizon
+bloom    ``(slot_version,        ValueError            ``(slot_version,
+         bits)``: one filter                           gen_start_ms, bits_cur,
+         per shard;                                    bits_prev)``: two filters
+         approximate                                   per shard; approximate
+=======  ======================  ====================  =========================
+
+- **Layouts.** ``key`` groups by fingerprint: a batch reads and writes
+  only the keys it touches, at one Python call per distinct
+  fingerprint. ``shard`` and ``bloom`` group by
+  ``abs(xxhash64(fingerprint)) % n_shards``: one vectorised call per
+  shard per batch, but a shard's whole state is rewritten each batch
+  that touches it. Pick ``shard`` for high-churn batches over a modest
+  key space, ``key`` for sparse batches over a huge cold one, and
+  ``bloom`` when even one entry per key is too much: state is
+  ``n_shards`` × 4 KiB forever (× 2 with a horizon), and a false
+  positive, at a rate of about ``(1 - e^{-7n/32768})^7`` per shard for
+  n distinct fingerprints, drops a new doc as a duplicate.
+- **In-batch pick.** Every cell keeps, per fingerprint, the row with
+  the lowest ``doc_id`` of the micro-batch (stable sort by ``doc_id``,
+  first row per fingerprint). Across batches the first batch wins.
+- **Horizons.** A wall-clock horizon (``ProcessingTimeTimeout``) is
+  refreshed by every arrival and evicts on the first batch after the
+  key has been idle for ttl, so eviction latency is horizon + one
+  batch. An event horizon is the watermark over ``ts_col`` (delay 0):
+  a fingerprint is a duplicate while its max event time + ttl is ahead
+  of the watermark. Bloom bits cannot be evicted per member, so its
+  event horizon rotates two filters in ttl bands of watermark time: a
+  duplicate within ttl is always suppressed, one older than 2·ttl
+  always re-admitted.
+- **Replay.** Without a horizon, a replay of the same files admits the
+  same fingerprints (the kept ``doc_id`` can differ if batch boundaries
+  move). A wall-clock horizon
+  does not: a month of history replayed in an hour fits inside any
+  wall horizon. Event horizons replay: decisions key off the watermark,
+  not off whether a timeout has fired (firing lags a batch), so one-
+  and many-batch replays of the same files converge (key: equal state;
+  shard: equal live members). Event cells need a UTC session.
+
+``transformWithStateInPandas`` (Spark 4's typed-state successor with
+native TTL) would express the same grid, but its Python driver worker
+needs ``google.protobuf`` and mandates the RocksDB state-store
+provider; ``applyInPandasWithState`` runs on the default provider with
+no extra dependencies.
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Iterator
 from typing import Any
 
@@ -45,739 +79,34 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-DOC_SCHEMA = T.StructType(
+from ..functions.text import content_fingerprint
+from ._drain import drain_available_now, drain_confs, make_pair_sink_writer
+
+__all__ = [
+    "bloom_slot_array",
+    "dedup_stream",
+    "dedup_stream_watermarked",
+    "run_dedup_stream",
+]
+
+_OUT_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
         T.StructField("text", T.StringType()),
         T.StructField("fingerprint", T.StringType()),
     ]
 )
+_OUT = _OUT_SCHEMA.fieldNames()
 
-_STATE_SCHEMA = T.StructType([T.StructField("seen", T.IntegerType())])
-
-
-def fingerprinted(docs: DataFrame) -> DataFrame:
-    """Attach the normalized-content md5 (same normalization as the
-    batch `dedup_fingerprint` query, so batch and stream agree on what
-    a duplicate is)."""
-    fp = F.md5(F.lower(F.regexp_replace("text", r"[ \t\n\r\f\x0B]+", " ")))
-    return docs.select("doc_id", "text", fp.alias("fingerprint"))
-
-
-def _emit_first_unseen(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Per fingerprint: emit the lowest-doc_id row the FIRST time the
-    fingerprint is ever seen; afterwards (same batch or any later one)
-    emit nothing. State = a single 'seen' flag."""
-    if state.exists:
-        return
-    best: pd.DataFrame | None = None
-    for pdf in pdfs:
-        cand = pdf.nsmallest(1, "doc_id")
-        if best is None or cand["doc_id"].iloc[0] < best["doc_id"].iloc[0]:
-            best = cand
-    if best is not None:
-        state.update((1,))
-        yield best[["doc_id", "text", "fingerprint"]]
-
-
-def dedup_stream(doc_stream: DataFrame) -> DataFrame:
-    """Streaming exact-dedup: one output row per never-before-seen
-    fingerprint, state persisted across micro-batches via the
-    checkpointed state store."""
-    return (
-        fingerprinted(doc_stream)
-        .groupBy("fingerprint")
-        .applyInPandasWithState(
-            _emit_first_unseen,
-            outputStructType=DOC_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Built-in counterpart: event-time-bounded dedup via watermark.
-# ---------------------------------------------------------------------------
-def dedup_stream_watermarked(
-    doc_stream: DataFrame, ts_col: str, delay: str = "1 hour"
-) -> DataFrame:
-    """The BUILT-IN horizon-bounded dedup, for streams that carry an
-    event-time column: ``withWatermark(ts) + dropDuplicatesWithinWatermark``
-    — state for a fingerprint is evicted once the watermark passes its
-    event time + delay, entirely JVM-side (no Python state function at
-    all; prefer this whenever the data has event time). The custom
-    operators in this module exist for what it can't express: dedup on
-    CONTENT irrespective of time with unbounded (``dedup_stream``),
-    wall-clock-bounded (``dedup_stream_ttl``), sharded-exact, or
-    bloom-bounded state, min-doc_id in-batch selection, and emit-once
-    "first ever seen" semantics rather than "no duplicate within the
-    watermark delay"."""
-    fp = F.md5(F.lower(F.regexp_replace("text", r"[ \t\n\r\f\x0B]+", " ")))
-    return (
-        doc_stream.withColumn("fingerprint", fp)  # keep ts_col for the watermark
-        .withWatermark(ts_col, delay)
-        .dropDuplicatesWithinWatermark(["fingerprint"])
-    )
-
-
-# ---------------------------------------------------------------------------
-# TTL variant: recency-horizon dedup with state EVICTION.
-# ---------------------------------------------------------------------------
-def _make_emit_unseen_ttl(ttl_ms: int):
-    """Fine-grained dedup state with a processing-time TTL: a
-    fingerprint's state is EVICTED after ``ttl_ms`` without arrivals, so
-    total state is bounded by the distinct-key volume of the horizon,
-    not of the stream's lifetime. A duplicate arriving inside the
-    horizon refreshes it (last-seen semantics — hot boilerplate stays
-    suppressed for as long as it keeps arriving); one arriving after
-    eviction is re-admitted as new, which is the contract: "dedup
-    against the last T of stream", the bounded-state policy that stays
-    EXACT inside its horizon (the bloom variant is the complementary
-    trade: unbounded horizon, approximate membership)."""
-
-    def emit(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            # Timeout invocations carry no data rows; drop the key.
-            state.remove()
-            return
-        if state.exists:
-            state.setTimeoutDuration(ttl_ms)  # refresh the horizon
-            return
-        best: pd.DataFrame | None = None
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            cand = pdf.nsmallest(1, "doc_id")
-            if best is None or cand["doc_id"].iloc[0] < best["doc_id"].iloc[0]:
-                best = cand
-        if best is not None:
-            state.update((1,))
-            state.setTimeoutDuration(ttl_ms)
-            yield best[["doc_id", "text", "fingerprint"]]
-
-    return emit
-
-
-def dedup_stream_ttl(doc_stream: DataFrame, ttl_seconds: int) -> DataFrame:
-    """Streaming exact dedup bounded by a recency horizon: same output
-    contract as ``dedup_stream`` inside the horizon, state evicted via
-    ``ProcessingTimeTimeout`` after ``ttl_seconds`` without arrivals.
-    Timeouts fire at micro-batch boundaries for keys WITHOUT data in
-    that batch, so eviction latency is horizon + one batch."""
-    return (
-        fingerprinted(doc_stream)
-        .groupBy("fingerprint")
-        .applyInPandasWithState(
-            _make_emit_unseen_ttl(ttl_seconds * 1000),
-            outputStructType=DOC_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# EVENT-time TTL variant: the horizon that survives backfill replay.
-# ---------------------------------------------------------------------------
-_EVENT_TTL_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("seen", T.IntegerType()),
-        T.StructField("last_ms", T.LongType()),  # max event time seen, epoch ms
-    ]
-)
-
-
-def _pdf_max_event_ms(pdf: pd.DataFrame, ts_col: str) -> int:
-    """Max event time of a pandas batch slice as epoch ms.
-    ``pd.Timestamp.value`` is nanoseconds regardless of the frame's
-    datetime64 resolution, so this is Arrow-resolution-proof. Exact
-    only under the UTC session ``dedup_stream_event_ttl`` enforces —
-    the worker sees tz-naive timestamps rendered in the session zone,
-    and the watermark/timeout APIs speak true epoch ms."""
-    return int(pd.Timestamp(pdf[ts_col].max()).value // 1_000_000)
-
-
-def _make_emit_unseen_event_ttl(ttl_ms: int, ts_col: str):
-    """Dedup state bounded by an EVENT-time horizon: a fingerprint is a
-    duplicate iff its stored max-event-time + ttl is still ahead of the
-    WATERMARK — wall-clock plays no part, so replaying a month of
-    history at full throughput (the 100 TB backfill recovery mode)
-    reproduces the same admit/suppress decisions as the original run.
-    Decisions key off the watermark directly, not off whether the
-    timeout has FIRED yet (firing lags one batch): an arrival whose
-    stored horizon the watermark has already passed is re-admitted as
-    new even if the eviction sweep hasn't reached the key — that is
-    what makes one-batch and many-batch replays of the same files
-    converge to the same state (pinned in tests)."""
-
-    def emit(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            # Watermark passed the stored horizon and the key had no
-            # data this batch: evict.
-            state.remove()
-            return
-        best: pd.DataFrame | None = None
-        max_ms: int | None = None
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            m = _pdf_max_event_ms(pdf, ts_col)
-            max_ms = m if max_ms is None else max(max_ms, m)
-            cand = pdf.nsmallest(1, "doc_id")
-            if best is None or cand["doc_id"].iloc[0] < best["doc_id"].iloc[0]:
-                best = cand
-        if best is None or max_ms is None:
-            return
-        wm = state.getCurrentWatermarkMs()
-        if state.exists and int(state.get[1]) + ttl_ms > wm:
-            # Inside the horizon: duplicate. Refresh to the max event
-            # time EVER seen (a late-but-valid row must not shrink the
-            # horizon).
-            new_last = max(int(state.get[1]), max_ms)
-            state.update((1, new_last))
-            state.setTimeoutTimestamp(new_last + ttl_ms)
-            return
-        # Never seen — or stored horizon already behind the watermark
-        # (expired-on-paper even if the timeout hasn't fired): admit as
-        # new. The watermark filter drops rows at-or-below wm before
-        # they reach this function, so max_ms > wm and the new timeout
-        # is always settable (> watermark).
-        state.update((1, max_ms))
-        state.setTimeoutTimestamp(max_ms + ttl_ms)
-        yield best[["doc_id", "text", "fingerprint"]]
-
-    return emit
-
-
-def dedup_stream_event_ttl(
-    doc_stream: DataFrame,
-    ts_col: str,
-    ttl_event_seconds: int,
-    watermark_delay: str = "0 seconds",
-) -> DataFrame:
-    """Streaming exact dedup bounded by an EVENT-time horizon:
-    "duplicate of anything whose event time is within the last
-    ``ttl_event_seconds`` of stream time", where stream time is the
-    watermark over ``ts_col``. This is the horizon that means something
-    under backfill replay — ``dedup_stream_ttl``'s
-    ``ProcessingTimeTimeout`` is a WALL-CLOCK horizon, and reprocessing
-    a month of history in an hour evicts nothing meaningful (the whole
-    month fits inside any realistic wall horizon), while this variant
-    reproduces the original admit/evict sequence because event time
-    replays identically. ``watermark_delay`` is the out-of-orderness
-    allowance (rows later than that are dropped by the engine before
-    the state function). Eviction latency: a key's state drops on the
-    first batch after the watermark passes last_event + ttl in which
-    the key has no data."""
-    from ._cohort import require_utc_session
-
-    require_utc_session(doc_stream.sparkSession)
-    fp = F.md5(F.lower(F.regexp_replace("text", r"[ \t\n\r\f\x0B]+", " ")))
-    return (
-        doc_stream.withColumn("fingerprint", fp)
-        .withWatermark(ts_col, watermark_delay)
-        .groupBy("fingerprint")
-        .applyInPandasWithState(
-            _make_emit_unseen_event_ttl(ttl_event_seconds * 1000, ts_col),
-            outputStructType=DOC_SCHEMA,
-            stateStructType=_EVENT_TTL_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Sharded EXACT state variant: vectorize away the per-key Python call.
-# ---------------------------------------------------------------------------
-_SHARD_EXACT_STATE_SCHEMA = T.StructType(
-    [T.StructField("fps", T.ArrayType(T.StringType()))]
-)
-
-
-def _emit_shard_unseen(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Per fingerprint-hash shard: emit each batch's min-doc_id row per
-    never-before-seen fingerprint; state is the shard's exact seen-set
-    (``array<string>``). One pandas sort + drop_duplicates + isin per
-    shard per batch — the whole batch slice is vectorized, matching the
-    fine-grained operator's semantics (min doc_id within the batch,
-    first batch wins) bit-for-bit."""
-    seen: list[str] = list(state.get[0]) if state.exists else []
-    frames = [pdf for pdf in pdfs if len(pdf)]
-    if not frames:
-        state.update((seen,))
-        return
-    batch = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-    batch = batch.sort_values("doc_id", kind="stable").drop_duplicates(
-        "fingerprint", keep="first"
-    )
-    fresh = batch[~batch["fingerprint"].isin(set(seen))]
-    # Plain-str state (numpy scalars poison the state pickle JVM-side).
-    state.update((seen + [str(f) for f in fresh["fingerprint"]],))
-    if len(fresh):
-        yield fresh[["doc_id", "text", "fingerprint"]]
-
-
-def dedup_stream_sharded(doc_stream: DataFrame, n_shards: int = 64) -> DataFrame:
-    """Streaming exact-dedup with SHARDED exact state: fingerprints hash
-    into ``n_shards`` key ranges, each holding its exact seen-set, so a
-    micro-batch pays ``n_shards`` vectorized state calls instead of one
-    Python call per distinct fingerprint (the fine-grained operator's
-    per-key cost: ~30 µs × |batch keys| of interpreter overhead, the
-    dominant term once the arithmetic is vectorized).
-
-    Same output as ``dedup_stream`` — exact, min-doc_id-per-batch,
-    first-batch-wins (a pytest pins the equivalence). The trade is state
-    I/O shape, not correctness: fine-grained state reads/writes ONLY the
-    keys present in a batch (total state can be billions of keys; a
-    batch touches its own), while a shard's whole seen-set is
-    deserialized and rewritten every batch that touches it. Pick by
-    batch-distinct-to-total-key ratio: high-churn firehoses with modest
-    total key space → sharded; huge cold key spaces with sparse batches
-    → fine-grained (or the bounded-state bloom below, which keeps the
-    shard shape but O(1) state per shard)."""
-    shard = F.abs(F.xxhash64("fingerprint")) % n_shards
-    return (
-        fingerprinted(doc_stream)
-        .withColumn("_shard", shard)
-        .groupBy("_shard")
-        .applyInPandasWithState(
-            _emit_shard_unseen,
-            outputStructType=DOC_SCHEMA,
-            stateStructType=_SHARD_EXACT_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Sharded EXACT state with an EVENT-time horizon: the firehose shape
-# with the horizon that survives backfill replay.
-# ---------------------------------------------------------------------------
-_SHARD_EVENT_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("fps", T.ArrayType(T.StringType())),
-        T.StructField("lasts", T.ArrayType(T.LongType())),  # per-member max event ms
-    ]
-)
-
-
-def _batch_event_ms(batch: pd.DataFrame, ts_col: str) -> pd.Series:
-    """Event times of a pandas batch as epoch ms, vectorized and
-    Arrow-resolution-proof (datetime64[us] deliveries are upcast to ns
-    before the integer view). Exact only under the UTC session the
-    event-TTL builders enforce — same contract as ``_pdf_max_event_ms``."""
-    return (
-        pd.to_datetime(batch[ts_col]).astype("datetime64[ns]").astype("int64")
-        // 1_000_000
-    )
-
-
-def _make_emit_shard_unseen_event_ttl(ttl_ms: int, ts_col: str):
-    """Sharded seen-set with PER-MEMBER event-time horizons: each
-    fingerprint carries its max event time; every visit prunes members
-    whose time + ttl is behind the WATERMARK before the membership
-    test, so admit/suppress decisions replay identically whether a
-    backfill runs as one batch or many (the wall-clock sharded operator
-    evicts nothing meaningful under replay — the whole history fits any
-    realistic wall horizon). Decisions key off the watermark directly,
-    not off whether the shard's timeout has fired (firing lags a
-    batch): an arrival whose stored twin is expired-on-paper re-admits
-    as new — the same convergence rule as the fine-grained
-    ``dedup_stream_event_ttl``, whose in-horizon semantics this matches
-    bit-for-bit (min doc_id per batch, first batch wins, duplicates
-    refresh to the max event time ever seen; pinned in tests). The
-    shard's registered timeout is max(member horizons) — the moment the
-    WHOLE cohort is dead — so an unvisited shard's state still drops."""
-
-    def emit(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            # Watermark passed every member's horizon and the shard had
-            # no data this batch: drop the whole seen-set.
-            state.remove()
-            return
-        if state.exists:
-            fps = list(state.get[0])
-            lasts = [int(x) for x in state.get[1]]
-        else:
-            fps, lasts = [], []
-        wm = state.getCurrentWatermarkMs()
-        live = [i for i, last in enumerate(lasts) if last + ttl_ms > wm]
-        if len(live) != len(fps):
-            fps = [fps[i] for i in live]
-            lasts = [lasts[i] for i in live]
-
-        frames = [pdf for pdf in pdfs if len(pdf)]
-        if not frames:
-            if fps:
-                state.update((fps, lasts))
-                state.setTimeoutTimestamp(max(lasts) + ttl_ms)
-            else:
-                state.remove()
-            return
-        batch = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-        batch = batch.assign(_ms=_batch_event_ms(batch, ts_col))
-        fp_max = batch.groupby("fingerprint", sort=False)["_ms"].max()
-        firsts = batch.sort_values("doc_id", kind="stable").drop_duplicates(
-            "fingerprint", keep="first"
-        )
-        idx = {f: i for i, f in enumerate(fps)}
-        dup_mask = firsts["fingerprint"].isin(idx)
-        for f in firsts.loc[dup_mask, "fingerprint"]:
-            i = idx[f]
-            # A late-but-valid row must not shrink the horizon.
-            lasts[i] = max(lasts[i], int(fp_max[f]))
-        fresh = firsts[~dup_mask]
-        for f in fresh["fingerprint"]:
-            fps.append(str(f))
-            lasts.append(int(fp_max[f]))
-        state.update((fps, lasts))
-        # Every live member's horizon is > wm (pruned above) and fresh
-        # ones carry max_ms > wm (the engine drops rows at-or-below the
-        # watermark), so the timeout is always settable.
-        state.setTimeoutTimestamp(max(lasts) + ttl_ms)
-        if len(fresh):
-            yield fresh[["doc_id", "text", "fingerprint"]]
-
-    return emit
-
-
-def dedup_stream_sharded_event_ttl(
-    doc_stream: DataFrame,
-    ts_col: str,
-    ttl_event_seconds: int,
-    n_shards: int = 64,
-    watermark_delay: str = "0 seconds",
-) -> DataFrame:
-    """Streaming exact dedup with SHARDED state AND an EVENT-time
-    horizon — the combination the 100 TB firehose actually needs: the
-    sharded layout amortizes the per-key Python call (one vectorized
-    state call per shard per batch, ``dedup_stream_sharded``), and the
-    event horizon bounds state by the distinct-key volume of the
-    horizon in STREAM time, so a month-long backfill replayed in an
-    hour reproduces the original admit/evict sequence instead of
-    peaking at full-history state (the round-10 watch item: both
-    firehose-shaped operators had no horizon lever at all). Same
-    output contract as ``dedup_stream_event_ttl`` (pinned equivalent
-    in tests); state is (fps, lasts) parallel arrays per shard —
-    ~(md5-string + long) per live member."""
-    from ._cohort import require_utc_session
-
-    require_utc_session(doc_stream.sparkSession)
-    fp = F.md5(F.lower(F.regexp_replace("text", r"[ \t\n\r\f\x0B]+", " ")))
-    shard = F.abs(F.xxhash64("fingerprint")) % n_shards
-    return (
-        doc_stream.withColumn("fingerprint", fp)
-        .withWatermark(ts_col, watermark_delay)
-        .withColumn("_shard", shard)
-        .groupBy("_shard")
-        .applyInPandasWithState(
-            _make_emit_shard_unseen_event_ttl(ttl_event_seconds * 1000, ts_col),
-            outputStructType=DOC_SCHEMA,
-            stateStructType=_SHARD_EVENT_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Bloom state with an EVENT-time horizon: generational rotation.
-# ---------------------------------------------------------------------------
-_BLOOM_EVENT_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("slot_version", T.IntegerType()),
-        T.StructField("gen_start_ms", T.LongType()),
-        T.StructField("bits_cur", T.ArrayType(T.LongType())),
-        T.StructField("bits_prev", T.ArrayType(T.LongType())),
-    ]
-)
-
-
-def _make_emit_bloom_unseen_event_ttl(ttl_ms: int, ts_col: str):
-    """Rotating-generation bloom: bloom bits are not attributable to
-    members, so per-member eviction is impossible — the bounded-state
-    answer is the classic TWO-generation rotation (one filter per
-    ``ttl`` band of stream time; membership = current OR previous;
-    inserts go to current; when the watermark crosses a band boundary,
-    previous is dropped, current becomes previous). The horizon is
-    therefore approximate BY DESIGN: a duplicate within ``ttl`` of
-    stream time is always suppressed (modulo the bloom FP rate), an
-    item older than ``2·ttl`` is always re-admitted, and in between it
-    depends on where the band boundary fell — the standard trade for
-    O(1) state per shard (2 × 4 KiB here) with a horizon. Wholly-idle
-    shards drop via a timeout at the end of the second band."""
-
-    def emit(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        n_words = BLOOM_BITS // 64
-        if state.hasTimedOut:
-            # Two full bands passed with no data: both filters stale.
-            state.remove()
-            return
-        wm = state.getCurrentWatermarkMs()
-        frames = [pdf for pdf in pdfs if len(pdf)]
-        batch = None
-        if frames:
-            batch = (
-                pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-            )
-        if state.exists:
-            stored_version = state.get[0]
-            if stored_version != _BLOOM_SLOT_VERSION:
-                raise ValueError(
-                    f"bloom state written under slot derivation "
-                    f"v{stored_version}, code is v{_BLOOM_SLOT_VERSION}: "
-                    "start a fresh checkpoint."
-                )
-            gen_start = int(state.get[1])
-            cur = np.array(state.get[2], dtype=np.int64).view(np.uint64).copy()
-            prev = np.array(state.get[3], dtype=np.int64).view(np.uint64).copy()
-            if wm >= gen_start + 2 * ttl_ms:
-                # Both generations predate the horizon: hard reset,
-                # re-anchor the band grid at the watermark.
-                cur = np.zeros(n_words, dtype=np.uint64)
-                prev = np.zeros(n_words, dtype=np.uint64)
-                gen_start = (wm // ttl_ms) * ttl_ms
-            elif wm >= gen_start + ttl_ms:
-                prev, cur = cur, np.zeros(n_words, dtype=np.uint64)
-                gen_start += ttl_ms
-        else:
-            if batch is None:
-                return  # nothing to anchor a fresh shard's band grid on
-            # The watermark LAGS one batch (it is 0 on the very first),
-            # so a fresh shard anchors its band grid on the later of the
-            # watermark and the batch's own max event time — anchoring
-            # on a lagging wm would register a timeout the next
-            # watermark advance immediately fires, wiping the filter.
-            anchor = max(wm, int(_batch_event_ms(batch, ts_col).max()))
-            gen_start = (anchor // ttl_ms) * ttl_ms
-            cur = np.zeros(n_words, dtype=np.uint64)
-            prev = np.zeros(n_words, dtype=np.uint64)
-
-        if batch is not None:
-            batch = batch[~batch.duplicated("fingerprint")]
-            slots = np.stack(batch["_slots"].to_numpy())  # (n, k)
-            words, offs = slots // 64, (slots % 64).astype(np.uint64)
-            union = cur | prev
-            seen = ((union[words] >> offs) & np.uint64(1)).all(axis=1)
-            kept = batch[~seen]
-            if len(kept):
-                ks = slots[~seen]
-                np.bitwise_or.at(
-                    cur, ks // 64, np.uint64(1) << (ks % 64).astype(np.uint64)
-                )
-        else:
-            kept = None  # pure rotation/bookkeeping visit
-        state.update(
-            (
-                _BLOOM_SLOT_VERSION,
-                int(gen_start),
-                cur.view(np.int64).tolist(),
-                prev.view(np.int64).tolist(),
-            )
-        )
-        state.setTimeoutTimestamp(gen_start + 2 * ttl_ms)
-        if kept is not None and len(kept):
-            yield kept[["doc_id", "text", "fingerprint"]]
-
-    return emit
-
-
-def dedup_stream_bloom_event_ttl(
-    doc_stream: DataFrame,
-    ts_col: str,
-    ttl_event_seconds: int,
-    n_shards: int = 64,
-    watermark_delay: str = "0 seconds",
-) -> DataFrame:
-    """Streaming dedup with BOUNDED state and an EVENT-time horizon:
-    ``dedup_stream_bloom``'s fixed-size shard filters, rotated in
-    ``ttl`` bands of watermark time (see the state function). State is
-    2 × 512 longs per shard FOREVER — the only dedup variant whose
-    state is constant in both key volume and horizon length — at the
-    cost of (a) the bloom FP rate and (b) a [ttl, 2·ttl) suppression
-    window instead of an exact horizon. Pick it when the distinct-key
-    volume inside the horizon would blow even the sharded-exact
-    layout's budget; pick ``dedup_stream_sharded_event_ttl`` when the
-    horizon must be exact."""
-    from ._cohort import require_utc_session
-
-    require_utc_session(doc_stream.sparkSession)
-    fp = F.md5(F.lower(F.regexp_replace("text", r"[ \t\n\r\f\x0B]+", " ")))
-    shard = F.abs(F.xxhash64("fingerprint")) % n_shards
-    return (
-        doc_stream.withColumn("fingerprint", fp)
-        .withWatermark(ts_col, watermark_delay)
-        .withColumn("_shard", shard)
-        .withColumn("_slots", bloom_slot_array(F.col("fingerprint")))
-        .groupBy("_shard")
-        .applyInPandasWithState(
-            _make_emit_bloom_unseen_event_ttl(ttl_event_seconds * 1000, ts_col),
-            outputStructType=DOC_SCHEMA,
-            stateStructType=_BLOOM_EVENT_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def run_dedup_stream(
-    spark: Any,
-    landing_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    timeout_s: int = 300,
-    max_files_per_trigger: int | None = None,
-    shuffle_partitions: int | None = None,
-    n_shards: int | None = None,
-    ttl_seconds: int | None = None,
-    ttl_event_seconds: int | None = None,
-    checkpoint_file_checksum: bool | None = None,
-) -> None:
-    """Drain a landing dir of docs JSONL through the stateful dedup into
-    parquet (availableNow; re-runs resume the fingerprint state). Each
-    micro-batch overwrites its own ``batch_id=N`` subtree so checkpoint
-    retries are idempotent (exactly-once, matching the state-store
-    semantics; a bare append would double-emit on retry).
-
-    ``max_files_per_trigger`` bounds each micro-batch's file intake —
-    Trigger.AvailableNow honors source read limits, so setting 1 over an
-    N-file landing dir forces N micro-batches and genuinely exercises
-    CROSS-batch state (the default drains everything in one batch).
-
-    ``shuffle_partitions`` sets the STATE partition count for this
-    stream. Streaming state layout is frozen by the first checkpoint —
-    the session's shuffle.partitions at first start is what the state
-    store lives with forever — so size it to the expected distinct-key
-    volume, not the session default: each micro-batch pays one state
-    commit per partition (at toy scale 32 partitions is pure commit
-    overhead; at 100 TB key volume you want hundreds). Restored after
-    the drain; existing checkpoints ignore it by design.
-
-    ``checkpoint_file_checksum`` toggles Spark 4.1's
-    ``spark.sql.streaming.checkpoint.fileChecksum.enabled`` for this
-    drain (restored after): every checkpoint/state file write spawns a
-    sibling ``.crc`` write, which for a per-run SCRATCH checkpoint
-    (rebuilt from zero each invocation) is pure fixed cost — ~0.1 s
-    per 2-batch drain of metadata fs ops at sf0.1. Leave None (session
-    default, on) for any checkpoint that outlives the run: the
-    checksum is what detects torn/corrupted checkpoint files on
-    restart. Same single-query-per-session assumption as
-    ``shuffle_partitions``."""
-    fields = [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-    ]
-    if ttl_event_seconds is not None:
-        fields.append(T.StructField("ts", T.TimestampType()))
-    src_schema = T.StructType(fields)
-    reader = spark.readStream.schema(src_schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.json(landing_dir)
-    # n_shards selects the sharded-exact operator, ttl_seconds /
-    # ttl_event_seconds the TTL-evicting ones (wall-clock vs event-time
-    # horizons — see dedup_stream_event_ttl for when each is right);
-    # n_shards COMPOSES with ttl_event_seconds (the firehose shape with
-    # the replay-safe horizon, dedup_stream_sharded_event_ttl);
-    # ttl_seconds composes with nothing. All-None keeps per-fingerprint
-    # NoTimeout state. All combinations pinned by tests.
-    if ttl_seconds is not None and (
-        n_shards is not None or ttl_event_seconds is not None
-    ):
-        raise ValueError(
-            "ttl_seconds (wall-clock horizon) is mutually exclusive with "
-            "n_shards and ttl_event_seconds"
-        )
-    if n_shards is not None and ttl_event_seconds is not None:
-        deduped = dedup_stream_sharded_event_ttl(
-            stream, "ts", ttl_event_seconds=ttl_event_seconds, n_shards=n_shards
-        )
-    elif n_shards is not None:
-        deduped = dedup_stream_sharded(stream, n_shards=n_shards)
-    elif ttl_seconds is not None:
-        deduped = dedup_stream_ttl(stream, ttl_seconds=ttl_seconds)
-    elif ttl_event_seconds is not None:
-        deduped = dedup_stream_event_ttl(
-            stream, "ts", ttl_event_seconds=ttl_event_seconds
-        )
-    else:
-        deduped = dedup_stream(stream)
-
-    from ._drain import make_pair_sink_writer
-
-    # Rows are already unique per batch (one per never-before-seen
-    # fingerprint), so no dedup keys; skip-empty applies in both TTL
-    # modes (zero-row state-cleanup batches must not litter the sink).
-    any_ttl = ttl_seconds is not None or ttl_event_seconds is not None
-    write_batch = make_pair_sink_writer(out_dir, None, skip_empty=any_ttl)
-
-    _CRC = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    saved_crc = spark.conf.get(_CRC)
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    if checkpoint_file_checksum is not None:
-        spark.conf.set(_CRC, str(checkpoint_file_checksum).lower())
-    try:
-        q = (
-            deduped.writeStream.outputMode("update")
-            .foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        # ProcessingTimeTimeout queries never self-terminate (they keep
-        # servicing state-cleanup batches); EventTimeTimeout ones
-        # normally do once the watermark stops advancing, but the
-        # drain-until-idle loop is safe for both (it breaks the moment
-        # the query goes inactive), so both TTL modes share it.
-        from ._drain import drain_available_now
-
-        drain_available_now(q, timeout_s, ttl=any_ttl)
-    finally:
-        if shuffle_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", saved)
-        if checkpoint_file_checksum is not None:
-            spark.conf.set(_CRC, saved_crc)
-
-
-# ---------------------------------------------------------------------------
-# Bloom-filter state variant: constant-size state per key-range shard.
-# ---------------------------------------------------------------------------
 BLOOM_BITS = 1 << 15  # 32768 bits = 512 longs per shard
 BLOOM_HASHES = 7
 # Slot-derivation version, persisted IN the state: v1 was md5 15-bit
-# windows (rounds ≤5), v2 is xxhash64+pmod. Bits set under one
-# derivation are meaningless under another, so resuming an old
-# checkpoint must fail LOUDLY — adding this field also changed the
-# state schema, which Spark's state-schema validation rejects at
-# restart for v1-era checkpoints; the in-state check below guards any
-# FUTURE derivation change that happens not to alter the schema.
+# windows, v2 is xxhash64+pmod. Bits set under one derivation are
+# meaningless under another, so resuming an old checkpoint must fail
+# LOUDLY. v1-era checkpoints are also rejected by Spark's state-schema
+# validation (the field changed the schema); the in-state check guards
+# a future derivation change that leaves the schema alone.
 _BLOOM_SLOT_VERSION = 2
-
-_BLOOM_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("slot_version", T.IntegerType()),
-        T.StructField("bits", T.ArrayType(T.LongType())),
-    ]
-)
 
 
 def bloom_slot_array(fingerprint: F.Column | str) -> F.Column:
@@ -794,123 +123,394 @@ def bloom_slot_array(fingerprint: F.Column | str) -> F.Column:
     )
 
 
-def _emit_bloom_unseen(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Per key-range shard: emit a row iff its fingerprint's bloom bits
-    are not all set, then set them. State is a FIXED 512-long bit array
-    regardless of how many fingerprints the shard has seen.
+# ---------------------------------------------------------------------------
+# Shared pieces of the state functions.
+# ---------------------------------------------------------------------------
+def _state_fn(step):
+    """Wrap a cell's ``step(key, batch, state, **kw) -> rows | None`` as
+    an applyInPandasWithState function. Timeout calls carry no rows and
+    drop the key's state; otherwise the micro-batch's slices arrive as
+    one frame (None when empty) and the returned rows are emitted."""
 
-    Fully vectorized over the batch (numpy bit ops on the precomputed
-    ``_slots`` column — no per-row Python loop, no hashing here): exact
-    in-batch duplicate fingerprints collapse to their first arrival,
-    survivors are membership-tested against the shard filter in one
-    gather, and the kept rows' bits are OR'd in with one scatter. One
-    deliberate difference from a sequential per-row insert: a unique doc
-    whose slots are jointly covered only by OTHER docs of the SAME batch
-    is kept (sequential would false-positive-drop it) — strictly fewer
-    false positives, same bounded state."""
-    n_words = BLOOM_BITS // 64
+    @functools.wraps(step)
+    def emit(
+        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState, **kw: Any
+    ) -> Iterator[pd.DataFrame]:
+        if state.hasTimedOut:
+            state.remove()
+            return
+        frames = [pdf for pdf in pdfs if len(pdf)]
+        batch = None
+        if len(frames) == 1:
+            batch = frames[0]
+        elif frames:
+            batch = pd.concat(frames, ignore_index=True)
+        rows = step(key, batch, state, **kw)
+        if rows is not None and len(rows):
+            yield rows[_OUT]
+
+    return emit
+
+
+def _first_rows(batch: pd.DataFrame) -> pd.DataFrame:
+    """The in-batch pick: lowest ``doc_id`` row per fingerprint."""
+    return batch.sort_values("doc_id", kind="stable").drop_duplicates("fingerprint")
+
+
+def _event_ms(batch: pd.DataFrame, ts_col: str) -> pd.Series:
+    """Event times as epoch ms. Arrow delivers tz-naive datetimes in the
+    session zone, so this is exact only under the UTC session the event
+    cells enforce; datetime64[us] deliveries are upcast to ns first."""
+    ts = pd.to_datetime(batch[ts_col]).astype("datetime64[ns]")
+    return ts.astype("int64") // 1_000_000
+
+
+def _horizon(
+    members: dict[str, int],
+    batch: pd.DataFrame | None,
+    ttl_ms: int,
+    wm: int,
+    ts_col: str,
+) -> tuple[dict[str, int], pd.DataFrame | None]:
+    """The event-horizon step of the key and shard cells. ``members``
+    maps fingerprint -> max event ms seen. Members whose horizon the
+    watermark has passed are dropped first; batch fingerprints not
+    among the survivors are fresh; every batch fingerprint's entry
+    becomes the max event time ever seen, so a late-but-valid row
+    never shrinks a horizon. Returns (live members, fresh rows)."""
+    live = {f: t for f, t in members.items() if t + ttl_ms > wm}
+    if batch is None:
+        return live, None
+    firsts = _first_rows(batch)
+    fresh = firsts[~firsts["fingerprint"].isin(live)]
+    ms = _event_ms(batch, ts_col).groupby(batch["fingerprint"], sort=False).max()
+    for f, t in ms.items():
+        # Plain str/int: numpy scalars poison the state pickle JVM-side.
+        live[str(f)] = int(max(live.get(f, t), t))
+    return live, fresh
+
+
+def _bloom_state(state: GroupState) -> tuple:
+    """The stored bloom fields after the slot-version check."""
+    stored = state.get
+    if stored[0] != _BLOOM_SLOT_VERSION:
+        raise ValueError(
+            f"bloom state written under slot derivation v{stored[0]}, "
+            f"code is v{_BLOOM_SLOT_VERSION}: the persisted bits test "
+            "different positions than this code sets — resuming would "
+            "silently leak duplicates and inflate false positives. "
+            "Start a fresh checkpoint."
+        )
+    return stored[1:]
+
+
+def _bits(longs: list | None = None) -> np.ndarray:
+    """A filter as uint64 words: the state's array<long> reinterpreted
+    (not converted), or all zeros."""
+    if longs is None:
+        return np.zeros(BLOOM_BITS // 64, dtype=np.uint64)
+    return np.array(longs, dtype=np.int64).view(np.uint64)
+
+
+def _longs(bits: np.ndarray) -> list[int]:
+    return bits.view(np.int64).tolist()
+
+
+def _bloom_admit(
+    batch: pd.DataFrame, member_bits: np.ndarray, insert_bits: np.ndarray
+) -> pd.DataFrame:
+    """First rows whose k slots are not all set in ``member_bits``; their
+    slots are then OR'd into ``insert_bits`` in one scatter. All rows are
+    tested against the filter as it stood before the batch, so a unique
+    doc whose slots only other docs of the same batch cover is kept (a
+    sequential insert would false-positive-drop it)."""
+    firsts = _first_rows(batch)
+    slots = np.stack(firsts["_slots"].to_numpy())  # (n, k)
+    offs = (slots % 64).astype(np.uint64)
+    seen = ((member_bits[slots // 64] >> offs) & np.uint64(1)).all(axis=1)
+    np.bitwise_or.at(insert_bits, slots[~seen] // 64, np.uint64(1) << offs[~seen])
+    return firsts[~seen]
+
+
+# ---------------------------------------------------------------------------
+# The cells' state functions.
+# ---------------------------------------------------------------------------
+@_state_fn
+def _emit_key(key, batch, state, ttl_ms=None):
+    """key × none / wall: a ``seen`` flag; under a wall-clock horizon
+    every arrival, duplicate or not, refreshes the timeout."""
+    fresh = None
+    if not state.exists:
+        if batch is None:
+            return None
+        state.update((1,))
+        fresh = _first_rows(batch)
+    if ttl_ms is not None:
+        state.setTimeoutDuration(ttl_ms)
+    return fresh
+
+
+@_state_fn
+def _emit_shard(key, batch, state):
+    """shard × none: the shard's exact seen-set."""
+    seen = list(state.get[0]) if state.exists else []
+    fresh = None
+    if batch is not None:
+        firsts = _first_rows(batch)
+        fresh = firsts[~firsts["fingerprint"].isin(set(seen))]
+        seen += [str(f) for f in fresh["fingerprint"]]
+    state.update((seen,))
+    return fresh
+
+
+@_state_fn
+def _emit_event(key, batch, state, ttl_ms, ts_col, shard=False):
+    """key / shard × event: the members' horizons. The registered
+    timeout is the last member's horizon, so an unvisited shard drops
+    once its whole seen-set is dead. Every live horizon is past the
+    watermark, and the engine drops rows at or below it before this
+    function, so the timeout is always settable."""
+    members = {}
     if state.exists:
-        stored_version = state.get[0]
-        if stored_version != _BLOOM_SLOT_VERSION:
-            raise ValueError(
-                f"bloom state written under slot derivation v{stored_version}, "
-                f"code is v{_BLOOM_SLOT_VERSION}: the persisted bits test "
-                "different positions than this code sets — resuming would "
-                "silently leak duplicates and inflate false positives. "
-                "Start a fresh checkpoint."
-            )
-        # State schema is array<signed long>; reinterpret, don't convert.
-        bits = np.array(state.get[1], dtype=np.int64).view(np.uint64).copy()
+        members = dict(zip(*state.get)) if shard else {key[0]: state.get[1]}
+    live, fresh = _horizon(
+        members, batch, ttl_ms, state.getCurrentWatermarkMs(), ts_col
+    )
+    if not live:
+        state.remove()
+        return None
+    last = max(live.values())
+    state.update((list(live), list(live.values())) if shard else (1, last))
+    state.setTimeoutTimestamp(last + ttl_ms)
+    return fresh
+
+
+@_state_fn
+def _emit_bloom(key, batch, state):
+    """bloom × none: one fixed-size filter per shard."""
+    bits = _bits(_bloom_state(state)[0] if state.exists else None)
+    kept = None if batch is None else _bloom_admit(batch, bits, bits)
+    state.update((_BLOOM_SLOT_VERSION, _longs(bits)))
+    return kept
+
+
+@_state_fn
+def _emit_bloom_event(key, batch, state, ttl_ms, ts_col):
+    """bloom × event: bloom bits are not attributable to members, so the
+    horizon is the classic two-generation rotation — membership is
+    current OR previous, inserts go to current, and when the watermark
+    crosses a band boundary previous is dropped and current becomes
+    previous. A wholly idle shard drops at the end of its second band."""
+    wm = state.getCurrentWatermarkMs()
+    if state.exists:
+        gen_start, cur, prev = _bloom_state(state)
+        cur, prev = _bits(cur), _bits(prev)
+        if wm >= gen_start + 2 * ttl_ms:
+            # Both generations predate the horizon: re-anchor at wm.
+            gen_start, cur, prev = wm // ttl_ms * ttl_ms, _bits(), _bits()
+        elif wm >= gen_start + ttl_ms:
+            gen_start, cur, prev = gen_start + ttl_ms, _bits(), cur
+    elif batch is None:
+        return None
     else:
-        bits = np.zeros(n_words, dtype=np.uint64)
-    frames = [pdf for pdf in pdfs if len(pdf)]
-    if not frames:
-        state.update((_BLOOM_SLOT_VERSION, bits.view(np.int64).tolist()))
-        return
-    batch = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-    batch = batch[~batch.duplicated("fingerprint")]
-    slots = np.stack(batch["_slots"].to_numpy())  # (n, k)
-    words, offs = slots // 64, (slots % 64).astype(np.uint64)
-    seen = ((bits[words] >> offs) & np.uint64(1)).all(axis=1)
-    kept = batch[~seen]
-    if len(kept):
-        ks = slots[~seen]
-        np.bitwise_or.at(
-            bits, ks // 64, np.uint64(1) << (ks % 64).astype(np.uint64)
+        # The watermark lags one batch (0 on the first), so a fresh shard
+        # anchors on the later of it and the batch's own max event time;
+        # a lagging anchor would register a timeout the next watermark
+        # advance fires at once, wiping the filter.
+        anchor = max(wm, int(_event_ms(batch, ts_col).max()))
+        gen_start, cur, prev = anchor // ttl_ms * ttl_ms, _bits(), _bits()
+    kept = None if batch is None else _bloom_admit(batch, cur | prev, cur)
+    state.update((_BLOOM_SLOT_VERSION, int(gen_start), _longs(cur), _longs(prev)))
+    state.setTimeoutTimestamp(gen_start + 2 * ttl_ms)
+    return kept
+
+
+def _schema(*fields: tuple[str, T.DataType]) -> T.StructType:
+    return T.StructType([T.StructField(name, dtype) for name, dtype in fields])
+
+
+_INT, _LONG = T.IntegerType(), T.LongType()
+_LONGS = T.ArrayType(_LONG)
+_NONE = GroupStateTimeout.NoTimeout
+_EVENT = GroupStateTimeout.EventTimeTimeout
+# (layout, horizon) -> (state function, state schema, timeout conf). The
+# schemas are the persisted checkpoint format: changing one orphans
+# every existing checkpoint of that cell.
+_CELLS = {
+    ("key", None): (_emit_key, _schema(("seen", _INT)), _NONE),
+    ("key", "wall"): (
+        _emit_key,
+        _schema(("seen", _INT)),
+        GroupStateTimeout.ProcessingTimeTimeout,
+    ),
+    ("key", "event"): (
+        _emit_event,
+        _schema(("seen", _INT), ("last_ms", _LONG)),
+        _EVENT,
+    ),
+    ("shard", None): (
+        _emit_shard,
+        _schema(("fps", T.ArrayType(T.StringType()))),
+        _NONE,
+    ),
+    ("shard", "event"): (
+        functools.partial(_emit_event, shard=True),
+        _schema(("fps", T.ArrayType(T.StringType())), ("lasts", _LONGS)),
+        _EVENT,
+    ),
+    ("bloom", None): (
+        _emit_bloom,
+        _schema(("slot_version", _INT), ("bits", _LONGS)),
+        _NONE,
+    ),
+    ("bloom", "event"): (
+        _emit_bloom_event,
+        _schema(
+            ("slot_version", _INT),
+            ("gen_start_ms", _LONG),
+            ("bits_cur", _LONGS),
+            ("bits_prev", _LONGS),
+        ),
+        _EVENT,
+    ),
+}
+
+
+def dedup_stream(
+    doc_stream: DataFrame,
+    layout: str = "key",
+    *,
+    n_shards: int = 64,
+    ttl_seconds: int | None = None,
+    ttl_event_seconds: int | None = None,
+    ts_col: str = "ts",
+) -> DataFrame:
+    """Streaming exact dedup of ``(doc_id, text[, ts_col])`` rows: one
+    ``(doc_id, text, fingerprint)`` row per fingerprint not seen before
+    (within the horizon, if any). ``layout`` is ``"key"``, ``"shard"``
+    or ``"bloom"``; ``n_shards`` sizes the last two. At most one of
+    ``ttl_seconds`` (wall clock, key layout only) and
+    ``ttl_event_seconds`` (watermark over ``ts_col``) sets a horizon.
+    See the module docstring for what each cell keeps and guarantees."""
+    wall, event = ttl_seconds is not None, ttl_event_seconds is not None
+    if wall and (layout != "key" or event):
+        raise ValueError(
+            "ttl_seconds (wall-clock horizon) needs layout='key' and no "
+            "ttl_event_seconds"
         )
-        state.update((_BLOOM_SLOT_VERSION, bits.view(np.int64).tolist()))
-        yield kept[["doc_id", "text", "fingerprint"]]
-    else:
-        state.update((_BLOOM_SLOT_VERSION, bits.view(np.int64).tolist()))
+    horizon = "wall" if wall else "event" if event else None
+    if (layout, horizon) not in _CELLS:
+        raise ValueError(f"unknown dedup layout {layout!r}")
+    state_fn, state_schema, timeout = _CELLS[(layout, horizon)]
+    if event:
+        from ._cohort import require_utc_session
 
+        require_utc_session(doc_stream.sparkSession)
 
-def dedup_stream_bloom(doc_stream: DataFrame, n_shards: int = 64) -> DataFrame:
-    """Streaming exact-dedup with BOUNDED state: fingerprints hash into
-    ``n_shards`` key ranges, each holding one fixed-size bloom filter
-    (512 longs) instead of one state entry per distinct fingerprint —
-    total state is n_shards x 4 KiB forever, the trade being a small
-    false-positive rate (a never-seen doc dropped as duplicate; FP rate
-    ~ (1 - e^{-kn/m})^k per shard, so size n_shards for the expected
-    distinct count). This is the sharded-bloom design the exact-state
-    operator's docstring points to at 100 TB; unlike that operator it
-    keeps NO doc payloads in state at all.
-
-    In-batch duplicates collapse to the FIRST row the shard processes
-    (pandas batch order), not necessarily min doc_id — online arrival
-    semantics; the exact-state operator keeps min-per-batch."""
-    shard = F.abs(F.xxhash64("fingerprint")) % n_shards
-    return (
-        fingerprinted(doc_stream)
-        .withColumn("_shard", shard)
-        .withColumn("_slots", bloom_slot_array(F.col("fingerprint")))
-        .groupBy("_shard")
-        .applyInPandasWithState(
-            _emit_bloom_unseen,
-            outputStructType=DOC_SCHEMA,
-            stateStructType=_BLOOM_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+    fingerprint = content_fingerprint("text").alias("fingerprint")
+    df = doc_stream.select("doc_id", "text", *([ts_col] if event else []), fingerprint)
+    if wall:
+        state_fn = functools.partial(state_fn, ttl_ms=ttl_seconds * 1000)
+    elif event:
+        df = df.withWatermark(ts_col, "0 seconds")
+        state_fn = functools.partial(
+            state_fn, ttl_ms=ttl_event_seconds * 1000, ts_col=ts_col
         )
+    group = "fingerprint"
+    if layout != "key":
+        group = "_shard"
+        df = df.withColumn(group, F.abs(F.xxhash64("fingerprint")) % n_shards)
+    if layout == "bloom":
+        df = df.withColumn("_slots", bloom_slot_array(F.col("fingerprint")))
+    return df.groupBy(group).applyInPandasWithState(
+        state_fn,
+        outputStructType=_OUT_SCHEMA,
+        stateStructType=state_schema,
+        outputMode="update",
+        timeoutConf=timeout,
     )
 
 
-def run_bloom_dedup_stream(
+def dedup_stream_watermarked(
+    doc_stream: DataFrame, ts_col: str, delay: str = "1 hour"
+) -> DataFrame:
+    """The BUILT-IN horizon-bounded dedup, for streams that carry an
+    event-time column: ``withWatermark(ts) + dropDuplicatesWithinWatermark``
+    — state for a fingerprint is evicted once the watermark passes its
+    event time + delay, entirely JVM-side (no Python state function at
+    all; prefer this whenever the data has event time). ``dedup_stream``
+    exists for what it can't express: dedup on CONTENT irrespective of
+    time, sharded or bloom-bounded state, min-doc_id in-batch selection,
+    and emit-once "first ever seen" semantics rather than "no duplicate
+    within the watermark delay"."""
+    return (
+        doc_stream.withColumn("fingerprint", content_fingerprint("text"))
+        .withWatermark(ts_col, delay)
+        .dropDuplicatesWithinWatermark(["fingerprint"])
+    )
+
+
+def run_dedup_stream(
     spark: Any,
     landing_dir: str,
     out_dir: str,
     checkpoint_dir: str,
     timeout_s: int = 300,
+    max_files_per_trigger: int | None = None,
+    shuffle_partitions: int | None = None,
+    n_shards: int = 64,
+    ttl_seconds: int | None = None,
     ttl_event_seconds: int | None = None,
+    checkpoint_file_checksum: bool | None = None,
+    layout: str = "key",
 ) -> None:
-    """Drain docs JSONL through the bloom-state dedup (availableNow,
-    idempotent batch_id-keyed sink like ``run_dedup_stream``).
-    ``ttl_event_seconds`` selects the generational event-horizon
-    variant (``dedup_stream_bloom_event_ttl``; rows then carry ``ts``)."""
+    """Drain a landing dir of docs JSONL (``doc_id``, ``text``, plus
+    ``ts`` under ``ttl_event_seconds``) through ``dedup_stream`` into
+    parquet (availableNow; re-runs resume the state). ``layout``,
+    ``n_shards``, ``ttl_seconds`` and ``ttl_event_seconds`` pick the
+    cell. Each micro-batch overwrites its own ``batch_id=N`` subtree, so
+    checkpoint retries are idempotent (a bare append would double-emit
+    on retry).
+
+    ``max_files_per_trigger`` bounds each micro-batch's file intake —
+    availableNow honours source read limits, so 1 over an N-file
+    landing dir forces N micro-batches and exercises CROSS-batch state.
+
+    ``shuffle_partitions`` and ``checkpoint_file_checksum`` are the
+    drain's conf dials (``_drain.drain_confs``). The state partition
+    count freezes at the first checkpoint, so size it to the expected
+    distinct-key volume, not the session default: each micro-batch pays
+    one state commit per partition. Turn the checksum off only for a
+    scratch checkpoint rebuilt each run (each checkpoint file write
+    otherwise spawns a ``.crc`` sibling); keep it for any checkpoint
+    that outlives the run, where it detects torn files on restart."""
     fields = [
         T.StructField("doc_id", T.LongType()),
         T.StructField("text", T.StringType()),
     ]
     if ttl_event_seconds is not None:
         fields.append(T.StructField("ts", T.TimestampType()))
-    stream = spark.readStream.schema(T.StructType(fields)).json(landing_dir)
-    if ttl_event_seconds is not None:
-        deduped = dedup_stream_bloom_event_ttl(
-            stream, "ts", ttl_event_seconds=ttl_event_seconds
-        )
-    else:
-        deduped = dedup_stream_bloom(stream)
-
-    from ._drain import drain_available_now, make_pair_sink_writer
-
-    ttl_mode = ttl_event_seconds is not None
-    write_batch = make_pair_sink_writer(out_dir, None, skip_empty=ttl_mode)
-    q = (
-        deduped.writeStream.outputMode("update")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    reader = spark.readStream.schema(T.StructType(fields))
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    deduped = dedup_stream(
+        reader.json(landing_dir),
+        layout,
+        n_shards=n_shards,
+        ttl_seconds=ttl_seconds,
+        ttl_event_seconds=ttl_event_seconds,
     )
-    drain_available_now(q, timeout_s, ttl=ttl_mode)
+    # Horizon cells run state-cleanup batches: those must not litter the
+    # sink with empty batches, and wall-clock ones never self-terminate,
+    # so they drain until idle.
+    any_ttl = ttl_seconds is not None or ttl_event_seconds is not None
+    write_batch = make_pair_sink_writer(out_dir, None, skip_empty=any_ttl)
+    with drain_confs(spark, shuffle_partitions, checkpoint_file_checksum):
+        q = (
+            deduped.writeStream.outputMode("update")
+            .foreachBatch(write_batch)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
+        drain_available_now(q, timeout_s, ttl=any_ttl)

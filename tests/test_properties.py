@@ -510,8 +510,8 @@ def test_sharded_emit_equals_per_key_composition(batches):
     import pandas as pd
 
     from streampro_assignment_etl_spark.streaming.stateful_dedup import (
-        _emit_first_unseen,
-        _emit_shard_unseen,
+        _emit_key,
+        _emit_shard,
     )
 
     shard_state = _MemState()
@@ -524,7 +524,7 @@ def test_sharded_emit_equals_per_key_composition(batches):
                 "fingerprint": [f for _, f in rows],
             }
         )
-        shard_out = list(_emit_shard_unseen(None, iter([pdf]), shard_state))
+        shard_out = list(_emit_shard(None, iter([pdf]), shard_state))
         shard_kept = sorted(
             (int(r.doc_id), r.fingerprint)
             for o in shard_out
@@ -534,7 +534,7 @@ def test_sharded_emit_equals_per_key_composition(batches):
         for f in sorted({f for _, f in rows}):
             sub = pdf[pdf["fingerprint"] == f]
             stt = fine_states.setdefault(f, _MemState())
-            for o in _emit_first_unseen(None, iter([sub]), stt):
+            for o in _emit_key(None, iter([sub]), stt):
                 fine_kept += [(int(r.doc_id), r.fingerprint) for r in o.itertuples()]
         assert shard_kept == sorted(fine_kept)
     # State parity: the shard's seen-set equals the union of fine keys.

@@ -896,7 +896,7 @@ def test_bloom_dedup_across_batches(spark, tmp_path):
     filters; at this scale (far below FP territory) output matches the
     exact-state operator's keep set."""
     from streampro_assignment_etl_spark.streaming.stateful_dedup import (
-        run_bloom_dedup_stream,
+        run_dedup_stream,
     )
 
     landing = tmp_path / "bloom_landing"
@@ -915,7 +915,7 @@ def test_bloom_dedup_across_batches(spark, tmp_path):
         )
         + "\n"
     )
-    run_bloom_dedup_stream(spark, str(landing), out, ckpt)
+    run_dedup_stream(spark, str(landing), out, ckpt, layout="bloom")
     got1 = {r["doc_id"] for r in spark.read.parquet(out).collect()}
     assert len(got1) == 3 and 1 in got1 and 3 in got1
     assert len(got1 & {0, 2}) == 1  # dup pair collapsed to one arrival
@@ -930,7 +930,7 @@ def test_bloom_dedup_across_batches(spark, tmp_path):
         )
         + "\n"
     )
-    run_bloom_dedup_stream(spark, str(landing), out, ckpt)
+    run_dedup_stream(spark, str(landing), out, ckpt, layout="bloom")
     got2 = {r["doc_id"] for r in spark.read.parquet(out).collect()}
     assert 11 in got2 and 10 not in got2  # state crossed the restart
 
@@ -959,7 +959,7 @@ def test_sharded_exact_dedup_matches_fine_grained(spark, tmp_path):
         ],
     ]
     outs = {}
-    for tag, kw in (("fine", {}), ("sharded", {"n_shards": 8})):
+    for tag, kw in (("fine", {}), ("sharded", {"layout": "shard", "n_shards": 8})):
         landing = tmp_path / f"{tag}_landing"
         landing.mkdir()
         for i, rows in enumerate(batches):
@@ -999,7 +999,8 @@ def test_sharded_exact_dedup_matches_fine_grained(spark, tmp_path):
     _os.utime(f, (1_000_000_300,) * 2)
     out, ckpt = str(tmp_path / "sharded_out"), str(tmp_path / "sharded_ckpt")
     run_dedup_stream(
-        spark, str(landing), out, ckpt, max_files_per_trigger=1, n_shards=8
+        spark, str(landing), out, ckpt,
+        max_files_per_trigger=1, layout="shard", n_shards=8,
     )
     after = {r["doc_id"] for r in spark.read.parquet(out).collect()}
     assert 21 in after and 20 not in after
@@ -1150,6 +1151,7 @@ def test_bloom_state_version_mismatch_fails_loudly():
     from streampro_assignment_etl_spark.streaming import stateful_dedup as sd
 
     class _StubState:
+        hasTimedOut = False
         exists = True
         get = (1, [0] * (sd.BLOOM_BITS // 64))  # v1-era state
 
@@ -1168,7 +1170,166 @@ def test_bloom_state_version_mismatch_fails_loudly():
         }
     )
     with pytest.raises(ValueError, match="slot derivation v1"):
-        list(sd._emit_bloom_unseen((0,), iter([batch]), _StubState()))
+        list(sd._emit_bloom((0,), iter([batch]), _StubState()))
+
+
+def test_dedup_stream_rejects_unsupported_cells():
+    """Only the seven layout × horizon cells exist. A wall-clock horizon
+    on a shard or bloom layout, both horizons at once, or an unknown
+    layout fail at build time, before the input frame is touched."""
+    from streampro_assignment_etl_spark.streaming.stateful_dedup import dedup_stream
+
+    for kw in (
+        {"layout": "shard", "ttl_seconds": 60},
+        {"layout": "bloom", "ttl_seconds": 60},
+        {"ttl_seconds": 60, "ttl_event_seconds": 60},
+    ):
+        with pytest.raises(ValueError, match="ttl_seconds"):
+            dedup_stream(None, **kw)
+    with pytest.raises(ValueError, match="layout 'minhash'"):
+        dedup_stream(None, layout="minhash")
+
+
+# Key and value schema of each dedup cell's state, as the statestore
+# reader sees them. Checkpoints persist these: a change orphans every
+# existing checkpoint of that cell.
+_DEDUP_STATE_FORMAT = {
+    ("key", None): (
+        "struct<fingerprint:string>",
+        "struct<groupState:struct<seen:int>>",
+    ),
+    ("key", "wall"): (
+        "struct<fingerprint:string>",
+        "struct<groupState:struct<seen:int>,timeoutTimestamp:bigint>",
+    ),
+    ("key", "event"): (
+        "struct<fingerprint:string>",
+        "struct<groupState:struct<seen:int,last_ms:bigint>,timeoutTimestamp:bigint>",
+    ),
+    ("shard", None): (
+        "struct<_shard:bigint>",
+        "struct<groupState:struct<fps:array<string>>>",
+    ),
+    ("shard", "event"): (
+        "struct<_shard:bigint>",
+        "struct<groupState:struct<fps:array<string>,lasts:array<bigint>>,"
+        "timeoutTimestamp:bigint>",
+    ),
+    ("bloom", None): (
+        "struct<_shard:bigint>",
+        "struct<groupState:struct<slot_version:int,bits:array<bigint>>>",
+    ),
+    ("bloom", "event"): (
+        "struct<_shard:bigint>",
+        "struct<groupState:struct<slot_version:int,gen_start_ms:bigint,"
+        "bits_cur:array<bigint>,bits_prev:array<bigint>>,timeoutTimestamp:bigint>",
+    ),
+}
+
+
+@pytest.mark.parametrize(
+    "layout,horizon",
+    list(_DEDUP_STATE_FORMAT),
+    ids=[f"{lay}-{hor or 'none'}" for lay, hor in _DEDUP_STATE_FORMAT],
+)
+def test_dedup_state_format_is_pinned(spark, tmp_path, layout, horizon):
+    """Each cell's checkpointed state keeps the key and value schema
+    existing checkpoints were written with."""
+    from streampro_assignment_etl_spark.streaming.stateful_dedup import (
+        run_dedup_stream,
+    )
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    (landing / "a.jsonl").write_text(
+        json.dumps({"doc_id": 1, "text": "a b", "ts": "2026-01-01T00:00:00"}) + "\n"
+    )
+    ckpt = str(tmp_path / "ckpt")
+    ttl = {None: {}, "wall": {"ttl_seconds": 60}, "event": {"ttl_event_seconds": 60}}
+    run_dedup_stream(
+        spark, str(landing), str(tmp_path / "out"), ckpt,
+        shuffle_partitions=1, layout=layout, n_shards=4, **ttl[horizon],
+    )
+    schema = spark.read.format("statestore").load(ckpt).schema
+    got = (
+        schema["key"].dataType.simpleString(),
+        schema["value"].dataType.simpleString(),
+    )
+    assert got == _DEDUP_STATE_FORMAT[(layout, horizon)]
+
+
+def test_batch_sinks_rank_batch_id_as_a_number(spark, tmp_path):
+    """``batch_id`` is a partition column and the package session turns
+    partition type inference off. Ranked as a string, batch 9 beats
+    batch 10, so a sink with ten or more micro-batches read stale rows.
+    Every batch-sink reader must pick batch 10."""
+    import pathlib
+
+    from streampro_assignment_etl_spark.streaming import (
+        compact_update_sink,
+        read_mg_sink,
+        read_update_sink,
+    )
+
+    upd, mg = str(tmp_path / "upd"), str(tmp_path / "mg")
+    for b, rows in ((9, [("s", "old")]), (10, [("s", "new1"), ("s", "new2")])):
+        spark.createDataFrame([("k", rows[0][1])], "k string, v string").write.parquet(
+            f"{upd}/batch_id={b}"
+        )
+        spark.createDataFrame(rows, "shard string, term string").write.parquet(
+            f"{mg}/batch_id={b}"
+        )
+
+    def latest():
+        got = read_update_sink(spark, upd, ["k"]).select("v", "batch_id")
+        return [tuple(r) for r in got.collect()]
+
+    assert latest() == [("new1", 10)]
+    terms = sorted(r["term"] for r in read_mg_sink(spark, mg).collect())
+    assert terms == ["new1", "new2"]
+
+    compact_update_sink(spark, upd, ["k"])
+    assert latest() == [("new1", 10)]
+    assert [p.name for p in pathlib.Path(upd).iterdir() if p.is_dir()] == ["batch_id=10"]
+
+
+def test_drain_confs_restores_dials_and_skips_unset_ones():
+    """The drain conf dials are restored when the body raises, a dial
+    left None is never read (the checkpoint-checksum key exists only in
+    Spark 4.1), and a conf unset before the drain is unset after it."""
+    from streampro_assignment_etl_spark.streaming._drain import drain_confs
+
+    crc = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
+
+    class _Conf:
+        def __init__(self):
+            self.values = {"spark.sql.shuffle.partitions": "8"}
+            self.read = []
+
+        def get(self, key, default):
+            self.read.append(key)
+            return self.values.get(key, default)
+
+        def set(self, key, value):
+            self.values[key] = value
+
+        def unset(self, key):
+            del self.values[key]
+
+    class _Spark:
+        conf = _Conf()
+
+    spark = _Spark()
+    with pytest.raises(RuntimeError, match="drain failed"):
+        with drain_confs(spark, shuffle_partitions=2):
+            assert spark.conf.values["spark.sql.shuffle.partitions"] == "2"
+            raise RuntimeError("drain failed")
+    assert spark.conf.values == {"spark.sql.shuffle.partitions": "8"}
+    assert spark.conf.read == ["spark.sql.shuffle.partitions"]
+
+    with drain_confs(spark, checkpoint_file_checksum=False):
+        assert spark.conf.values[crc] == "false"
+    assert spark.conf.values == {"spark.sql.shuffle.partitions": "8"}
 
 
 def test_read_update_sink_keeps_latest_batch_per_key(spark, tmp_path):
@@ -1318,6 +1479,7 @@ def test_compact_update_sink_read_equivalent_and_fewer_files(spark, tmp_path):
     naive = sorted(
         tuple(r)
         for r in spark.read.option("basePath", out).parquet(out)
+        .withColumn("batch_id", F.col("batch_id").cast("long"))
         .select(*read_update_sink(spark, out, keys).columns)
         .collect()
     )
@@ -1953,7 +2115,7 @@ def test_fuzzy_dedup_ttl_evicts_idle_cohorts(spark, tmp_path):
     # batch has no data for doc 1's band buckets, so their expired
     # timeouts fire there (a near-dup arriving directly would land IN
     # those buckets and refresh instead of evicting — last-seen TTL
-    # semantics, same as dedup_stream_ttl).
+    # semantics, same as dedup_stream(ttl_seconds=...)).
     (landing / "b.jsonl").write_text(json.dumps({"doc_id": 2, "text": other}) + "\n")
     run_fuzzy_dedup_stream(spark, str(landing), out, ckpt, ttl_seconds=2)
     # Near-dups of doc 1 arrive: they pair with each other (in-batch)
@@ -1974,7 +2136,7 @@ def test_fuzzy_dedup_ttl_evicts_idle_cohorts(spark, tmp_path):
 def test_event_ttl_dedup_evicts_by_event_time_and_replays_deterministically(
     spark, tmp_path
 ):
-    """EVENT-time TTL dedup (dedup_stream_event_ttl): the horizon is
+    """EVENT-time TTL dedup (key layout, ttl_event_seconds): the horizon is
     watermark time, so eviction is driven by the DATA — no sleeps
     anywhere in this test — and a backfill replay of the same files
     converges to the same surviving state whether it runs as one
@@ -2225,7 +2387,7 @@ def test_event_ttl_builders_require_utc_session(spark):
         fuzzy_dedup_stream,
     )
     from streampro_assignment_etl_spark.streaming.stateful_dedup import (
-        dedup_stream_event_ttl,
+        dedup_stream,
     )
 
     df = spark.createDataFrame([(1,)], "x int")  # guard fires pre-plan
@@ -2233,7 +2395,7 @@ def test_event_ttl_builders_require_utc_session(spark):
     spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
     try:
         with pytest.raises(ValueError, match="timeZone=UTC"):
-            dedup_stream_event_ttl(df, "ts", ttl_event_seconds=60)
+            dedup_stream(df, ttl_event_seconds=60)
         with pytest.raises(ValueError, match="timeZone=UTC"):
             fuzzy_dedup_stream(df, ttl_event_seconds=60)
         with pytest.raises(ValueError, match="timeZone=UTC"):
@@ -2354,7 +2516,7 @@ def test_index_append_stream_bit_equal_and_replay_idempotent(spark, tmp_path):
 
 @pytest.mark.slow
 def test_sharded_event_ttl_matches_fine_grained_and_replays(spark, tmp_path):
-    """dedup_stream_sharded_event_ttl (the firehose layout with the
+    """Shard layout with an event horizon (the firehose layout with the
     replay-safe horizon — round-10 watch item): same emitted sequence
     as the fine-grained event-TTL operator on the same files
     (duplicate inside the horizon suppressed, re-admitted once the
@@ -2413,16 +2575,18 @@ def test_sharded_event_ttl_matches_fine_grained_and_replays(spark, tmp_path):
     out_m, ckpt_m = str(tmp_path / "sev_out_m"), str(tmp_path / "sev_ckpt_m")
     run_dedup_stream(
         spark, str(landing), out_m, ckpt_m,
-        max_files_per_trigger=1, n_shards=4, ttl_event_seconds=3600,
+        max_files_per_trigger=1, layout="shard", n_shards=4,
+        ttl_event_seconds=3600,
     )
-    # Same admit/suppress sequence as dedup_stream_event_ttl's pin: 2
+    # Same admit/suppress sequence as the key layout's event pin: 2
     # suppressed inside the horizon, 9 re-admitted past it.
     assert emitted(out_m) == [1, 3, 7, 9]
 
     # One-batch replay on a fresh checkpoint: identical live view.
     out_o, ckpt_o = str(tmp_path / "sev_out_o"), str(tmp_path / "sev_ckpt_o")
     run_dedup_stream(
-        spark, str(landing), out_o, ckpt_o, n_shards=4, ttl_event_seconds=3600,
+        spark, str(landing), out_o, ckpt_o,
+        layout="shard", n_shards=4, ttl_event_seconds=3600,
     )
     live_m, live_o = live_members(ckpt_m), live_members(ckpt_o)
     assert live_m == live_o
@@ -2436,7 +2600,7 @@ def test_sharded_event_ttl_matches_fine_grained_and_replays(spark, tmp_path):
 
 @pytest.mark.slow
 def test_bloom_event_ttl_generational_rotation(spark, tmp_path):
-    """dedup_stream_bloom_event_ttl: O(1)-state horizon via rotating
+    """Bloom layout with an event horizon: O(1)-state horizon via rotating
     generations — a duplicate within the ttl of stream time is
     suppressed, the same content is re-admitted once the watermark has
     advanced 2·ttl past it (both filters rotated away), and every
@@ -2446,7 +2610,7 @@ def test_bloom_event_ttl_generational_rotation(spark, tmp_path):
     import os as _os
 
     from streampro_assignment_etl_spark.streaming.stateful_dedup import (
-        run_bloom_dedup_stream,
+        run_dedup_stream,
     )
 
     landing = tmp_path / "bev_landing"
@@ -2462,7 +2626,9 @@ def test_bloom_event_ttl_generational_rotation(spark, tmp_path):
         return sorted(r["doc_id"] for r in spark.read.parquet(o).collect())
 
     write(0, [{"doc_id": 1, "text": "alpha beta gamma", "ts": "2026-01-01T00:00:00"}])
-    run_bloom_dedup_stream(spark, str(landing), out, ckpt, ttl_event_seconds=3600)
+    run_dedup_stream(
+        spark, str(landing), out, ckpt, layout="bloom", ttl_event_seconds=3600
+    )
     assert emitted(out) == [1]
 
     # Duplicate inside the horizon + a watermark-advancer 2.5 h out.
@@ -2470,13 +2636,17 @@ def test_bloom_event_ttl_generational_rotation(spark, tmp_path):
         {"doc_id": 2, "text": "ALPHA  beta gamma", "ts": "2026-01-01T00:10:00"},
         {"doc_id": 3, "text": "delta epsilon", "ts": "2026-01-01T02:30:00"},
     ])
-    run_bloom_dedup_stream(spark, str(landing), out, ckpt, ttl_event_seconds=3600)
+    run_dedup_stream(
+        spark, str(landing), out, ckpt, layout="bloom", ttl_event_seconds=3600
+    )
     assert emitted(out) == [1, 3]  # 2 suppressed by the current filter
 
     # Same content again, with the watermark now ≥ 2·ttl past its
     # insertion band: both generations rotated away → re-admitted.
     write(2, [{"doc_id": 9, "text": "alpha beta  GAMMA", "ts": "2026-01-01T02:35:00"}])
-    run_bloom_dedup_stream(spark, str(landing), out, ckpt, ttl_event_seconds=3600)
+    run_dedup_stream(
+        spark, str(landing), out, ckpt, layout="bloom", ttl_event_seconds=3600
+    )
     assert emitted(out) == [1, 3, 9]
 
     # Surviving shard state is anchored at the current band: visited
